@@ -2,7 +2,15 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row
+import uuid
+from concurrent.futures import ThreadPoolExecutor, wait
+from typing import Callable, TypeVar
+
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.util import inheritable_thread_target
+
+M = TypeVar("M")
+S = TypeVar("S")
 
 
 def first_row(df: DataFrame) -> Row | None:
@@ -22,3 +30,42 @@ def first_row(df: DataFrame) -> Row | None:
     """
     rows = df.collect()
     return rows[0] if rows else None
+
+
+def overlap(
+    spark: SparkSession, main: Callable[[], M], side: Callable[[], S]
+) -> tuple[M, S]:
+    """Run ``side()`` on a driver thread while ``main()`` runs on this
+    one, and return both results.  For independent driver jobs over the
+    same inputs: actions are only sequential because the driver calls
+    them sequentially, so the side job's scheduling latency hides under
+    the main job's.
+
+    The side thread inherits the caller's local properties (job group,
+    description) and tags its jobs.  If ``main()`` raises, the tagged
+    jobs are cancelled until the side thread has finished, and only then
+    does the error propagate -- no orphaned job keeps running beside
+    the caller's next one.  A ``side()`` error surfaces after
+    ``main()`` returns."""
+    sc = spark.sparkContext
+    tag = f"overlap-{uuid.uuid4().hex}"
+
+    def tagged() -> S:
+        sc.addJobTag(tag)
+        try:
+            return side()
+        finally:
+            sc.removeJobTag(tag)
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        fut = pool.submit(inheritable_thread_target(spark)(tagged))
+        try:
+            out = main()
+        except BaseException:
+            # a job the side thread submits after one cancel is caught
+            # by the next
+            while not fut.done():
+                sc.cancelJobsWithTag(tag)
+                wait([fut], timeout=0.05)
+            raise
+        return out, fut.result()

@@ -43,12 +43,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mapreduce6240project_spark.functions.actions import overlap
 from mapreduce6240project_spark.functions.distance import (
     DISTANCE_FEATURES,
     HASHTAG_WEIGHT,
     feature_distance,
     medoid_distance_literal,
 )
+from mapreduce6240project_spark.session import pin
 
 FEATURE_COLS = ("tweet_id",) + DISTANCE_FEATURES
 
@@ -275,7 +277,7 @@ def kmedoids(
     src_level = features.storageLevel
     features = features.select(*FEATURE_COLS)
     if not (src_level.useMemory or src_level.useDisk):
-        features = features.persist()
+        features = pin(features)
 
     # Iterate over the combo-compressed table: one full-data shuffle up
     # front, then every iteration touches C rows (distinct feature
@@ -299,21 +301,7 @@ def kmedoids(
     def _probe():
         return combos.limit(driver_combo_threshold + 1).collect()
 
-    head_future = None
-    pool = None
-    if update_cap is None and seeds is None:
-        # The probe and the seed draw are independent jobs over the same
-        # cached projection; submitting the probe from a driver thread
-        # overlaps its shuffle with the seed TakeOrdered instead of
-        # paying the two scheduling latencies back to back (r11, guide
-        # section 2.6 -- actions are only sequential because the driver
-        # calls them sequentially).
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=1)
-        head_future = pool.submit(_probe)
-
-    if seeds is None:
+    def _draw() -> tuple[list[int], list[dict]]:
         from mapreduce6240project_spark.operators.sampling import seed_hash
 
         # Fused seed draw + medoid feature fetch: TakeOrdered of the
@@ -330,48 +318,45 @@ def kmedoids(
         # k-th medoid's features from an arbitrary copy).  Any
         # duplicate among the k+1 rows falls back to the original
         # distinct-draw path.
-        try:
-            rows = (
-                features.orderBy(seed_hash("tweet_id"), F.col("tweet_id"))
-                .limit(k + 1)
-                .collect()
-            )
-        except BaseException:
-            if pool is not None:
-                pool.shutdown(wait=False)
-            raise
+        rows = (
+            features.orderBy(seed_hash("tweet_id"), F.col("tweet_id"))
+            .limit(k + 1)
+            .collect()
+        )
         take = rows[:k]
-        seeds = [int(r["tweet_id"]) for r in take]
-        # equal ids sort adjacently: any duplicate of seeds[0..k-2] is
+        drawn = [int(r["tweet_id"]) for r in take]
+        # equal ids sort adjacently: any duplicate of drawn[0..k-2] is
         # already inside the first k rows, and a duplicate of the k-th
         # seed can only sit at row k+1 -- so these two checks cover
         # every duplicated seed id (fewer than k rows = a short draw,
         # handled like the old path: unique ids are accepted as-is)
-        if len(set(seeds)) == len(seeds) and (
-            len(rows) <= k or int(rows[k]["tweet_id"]) != seeds[-1]
+        if len(set(drawn)) == len(drawn) and (
+            len(rows) <= k or int(rows[k]["tweet_id"]) != drawn[-1]
         ):
-            medoids = [{c: r[c] for c in FEATURE_COLS} for r in take]
-        else:
-            from mapreduce6240project_spark.operators.sampling import (
-                sample_k_seeds,
-            )
+            return drawn, [{c: r[c] for c in FEATURE_COLS} for r in take]
+        from mapreduce6240project_spark.operators.sampling import sample_k_seeds
 
-            seeds = [int(r.tweet_id) for r in sample_k_seeds(features, k).collect()]
-            medoids = _collect_medoids(features, seeds)
-    else:
+        drawn = [int(r.tweet_id) for r in sample_k_seeds(features, k).collect()]
+        return drawn, _collect_medoids(features, drawn)
+
+    head = None
+    if seeds is not None:
         seeds = [int(s) for s in seeds]
         medoids = _collect_medoids(features, seeds)
+        if update_cap is None:
+            head = _probe()
+    elif update_cap is None:
+        # The probe and the seed draw are independent jobs over the same
+        # cached projection; running the probe on a driver thread
+        # overlaps its shuffle with the seed TakeOrdered instead of
+        # paying the two scheduling latencies back to back (r11, guide
+        # section 2.6).
+        (seeds, medoids), head = overlap(features.sparkSession, _draw, _probe)
+    else:
+        seeds, medoids = _draw()
     k = len(seeds)
 
     result = KMedoidsResult(assignments=features, medoids=medoids)
-
-    if head_future is not None:
-        head = head_future.result()
-        pool.shutdown(wait=False)
-    elif update_cap is None:
-        head = _probe()
-    else:
-        head = None
 
     if head is not None and len(head) <= driver_combo_threshold:
         combo_rows = [r.asDict() for r in head]

@@ -33,37 +33,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce6240project_spark.functions.actions import first_row
+from mapreduce6240project_spark.session import pin
 
-# ---------------------------------------------------------------------------
-# cache lifecycle: the pair generators persist intermediate frames whose
-# lifetime is tied to a lazily returned result, so they cannot unpersist
-# before returning.  Handles are tracked here; long-lived sessions call
-# :func:`release_dedup_caches` between pipelines to drop them (round-3
-# advice: unbounded accumulation in a multi-tenant driver).
-#
-# Scoping is PER-THREAD by default (round-5 verdict item 7): a pipeline
-# wrapped in ``track_dedup_caches`` registers its frames into a
-# thread-local scope, so its exit releases exactly its own frames and a
-# concurrent pipeline on another thread is untouched.  (The previous
-# length-mark over one global list could pop a concurrent pipeline's
-# handles registered during the block.)  Frames persisted OUTSIDE any
-# scope land in the process-global list, which
-# :func:`release_dedup_caches` drains -- the compatibility path for the
-# one-pipeline-at-a-time driver.  The lock makes the global
-# bookkeeping itself thread-safe; thread-local scopes need none.
-# ---------------------------------------------------------------------------
+# Intermediate frames these generators persist are read by the lazily
+# returned result, so they are pinned (``session.pin``) rather than
+# unpersisted here; the caller frees them with ``session.release_pins``
+# once the consuming action has run.
 
-_live_caches: list[DataFrame] = []
-_caches_lock = threading.Lock()
-_scope_local = threading.local()  # .stack: list[list[DataFrame]]
 
 class _ThreadLocalStats:
     """Mapping-like per-thread diagnostics store.  Same dict interface
     the callers always used (``last_run_stats["hot_probe"]``), but each
     thread sees its own underlying dict -- concurrent dedup pipelines
-    (explicitly supported via the thread-local cache scoping above) no
-    longer clobber each other's ``hot_probe``/``hot_buckets`` values
-    (round-6 advice)."""
+    on separate threads no longer clobber each other's
+    ``hot_probe``/``hot_buckets`` values (round-6 advice)."""
 
     def __init__(self, **defaults) -> None:
         self._defaults = dict(defaults)
@@ -99,81 +82,6 @@ class _ThreadLocalStats:
 #: contract.
 last_run_stats = _ThreadLocalStats(hot_buckets=0)
 
-
-def _track_persist(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Persist ``df``, record the handle for later release, and (by
-    default) materialize it so both consumers read the cache.  The
-    handle lands in the calling thread's innermost ``track_dedup_caches``
-    scope when one is active, else in the process-global list."""
-    df = df.persist()
-    stack = getattr(_scope_local, "stack", None)
-    if stack:
-        stack[-1].append(df)
-    else:
-        with _caches_lock:
-            _live_caches.append(df)
-    if eager:
-        df.count()
-    return df
-
-
-def release_dedup_caches() -> int:
-    """Unpersist every frame cached by the dedup pair generators.  Call
-    after the consuming action completes (results already materialized
-    or written).  Returns the number of handles released."""
-    n = 0
-    while True:
-        with _caches_lock:
-            if not _live_caches:
-                break
-            df = _live_caches.pop()
-        try:
-            df.unpersist(blocking=False)
-            n += 1
-        except Exception:
-            pass
-    return n
-
-
-class track_dedup_caches:
-    """Context manager scoping cache release to one pipeline: on exit,
-    unpersists exactly the frames registered *inside* the block **by
-    this thread**, leaving handles owned by concurrent pipelines alone.
-    The isolation is thread-local (per-call scoping is the default
-    whenever the manager is used), so two pipelines on two threads can
-    each wrap themselves and release independently -- no global mark,
-    no cross-release.
-
-    >>> with track_dedup_caches():
-    ...     survivors = minhash_dedup(docs)
-    ...     survivors.write.parquet(...)        # consume before exit
-    """
-
-    def __enter__(self):
-        stack = getattr(_scope_local, "stack", None)
-        if stack is None:
-            stack = _scope_local.stack = []
-        self._scope: list[DataFrame] = []
-        stack.append(self._scope)
-        return self
-
-    def __exit__(self, *exc):
-        stack = _scope_local.stack
-        # pop THIS scope (it is the innermost for well-nested usage;
-        # remove-by-IDENTITY tolerates exotic interleavings -- two empty
-        # scopes compare EQUAL as lists, so ``list.remove`` could pop a
-        # different pipeline's scope and leak/mis-release its frames)
-        if stack and stack[-1] is self._scope:
-            stack.pop()
-        else:  # pragma: no cover - defensive
-            idx = next(i for i, s in enumerate(stack) if s is self._scope)
-            del stack[idx]
-        for df in self._scope:
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                pass
-        return False
 
 # ---------------------------------------------------------------------------
 # tokenization / shingling (shared)
@@ -439,9 +347,9 @@ def minhash_candidate_pairs(
     :func:`minhash_dedup` uses it; callers that need the literal pair
     list keep the default False.
 
-    Caches the signature frame plus the hot-bucket list every call
-    (and two lazy derivations when collapsing) -- release with
-    :func:`release_dedup_caches`."""
+    Pins the signature frame plus the hot-bucket list every call (and
+    two lazy derivations when collapsing) -- ``session.release_pins``
+    frees them."""
     rows_per_band = n_hashes // bands
 
     def _banded(sig_df, extra_cols):
@@ -534,12 +442,11 @@ def minhash_candidate_pairs(
             return self_join(banded, banded, salted=False)
         # Buckets below the threshold bound the plain join's worst task
         # at threshold^2/2 pairs.
-        hot = _track_persist(
+        hot = pin(
             banded.groupBy("band", "band_hash")
             .agg(F.count(F.lit(1)).alias("_bn"))
             .filter(F.col("_bn") >= hot_bucket_threshold)
-            .select("band", "band_hash"),
-            eager=False,
+            .select("band", "band_hash")
         )
         n_hot = hot.count()
         last_run_stats["hot_buckets"] = n_hot  # diagnostic (tests/ops)
@@ -599,7 +506,7 @@ def minhash_candidate_pairs(
         )
 
     if collapse_identical is False:
-        # eager=False: the hot-bucket probe inside _banded is the FIRST
+        # lazy pin: the hot-bucket probe inside _banded is the FIRST
         # action against the persisted signature frame, and reading a
         # cached relation materializes every scanned partition whole --
         # so the probe job doubles as the cache fill and the separate
@@ -609,10 +516,7 @@ def minhash_candidate_pairs(
         # sampled explode+hash on top of the fill the count() paid
         # anyway).  Both self-join sides then read the warm cache.
         return _naive(
-            _track_persist(
-                minhash_signatures(docs, text_col, id_col, n_hashes, shingle_n),
-                eager=False,
-            )
+            pin(minhash_signatures(docs, text_col, id_col, n_hashes, shingle_n))
         )
 
     # --- collapse identical normalized texts -------------------------------
@@ -624,25 +528,24 @@ def minhash_candidate_pairs(
     # Identical docs re-hash their shingles redundantly, but that work
     # is skewless and linear; deduplicating text first would mean
     # shuffling text.
-    allsigs = _track_persist(
-        minhash_signatures(docs, text_col, id_col, n_hashes, shingle_n, carry_fp=True)
+    allsigs = pin(
+        minhash_signatures(docs, text_col, id_col, n_hashes, shingle_n, carry_fp=True),
+        eager=True,
     )
     members = allsigs.select("_fp", id_col)
     # lazy persists: groups and rep_sigs are cheap derivations of the
     # cached signature table; the one eager materialization below
     # (rep_pairs) fills both caches for every later consumer.  Extra
     # eager counts here were each a measured full sequential pass.
-    groups = _track_persist(
+    groups = pin(
         members.groupBy("_fp").agg(
             F.min(id_col).alias("_rid"), F.count("*").alias("_n")
         ),
-        eager=False,
     )
     # representative signatures: id-join reusing the aggregate's hash
     # partitioning (groups is one small row per distinct text)
-    rep_sigs = _track_persist(
+    rep_sigs = pin(
         allsigs.join(groups.select(F.col("_rid").alias(id_col), "_n"), id_col),
-        eager=False,
     )
 
     # representative pairs, carrying each side's group size: one row per
@@ -666,7 +569,7 @@ def minhash_candidate_pairs(
     )
     # eager: pure + cross both read rep_pairs; group-pair-scale rows
     # (bounded by the deduped candidate count)
-    rep_pairs = _track_persist(rep_pairs)
+    rep_pairs = pin(rep_pairs, eager=True)
 
     # singleton-singleton pairs (the overwhelming majority on a
     # dup-light corpus) need no expansion: member id == rep id, and the
@@ -818,12 +721,11 @@ def jaccard_verified_pairs(
     # pairs persists LAZILY (r10 optimization): ids.count() below is the
     # first action over the chain and scans pairs in full, so the former
     # separate eager pairs.count() was a redundant sequential job.
-    pairs = _track_persist(candidates.select("id_a", "id_b"), eager=False)
-    ids = _track_persist(
+    pairs = pin(candidates.select("id_a", "id_b"))
+    ids = pin(
         pairs.select(F.col("id_a").alias(id_col))
         .union(pairs.select(F.col("id_b").alias(id_col)))
         .distinct(),
-        eager=False,
     )
     # The count stays an explicit job BEFORE the semi-join below is
     # planned: a materialized InMemoryRelation carries accurate size
@@ -840,9 +742,8 @@ def jaccard_verified_pairs(
     # -- and the >max_docs branch is exactly the dup-heavy regime where
     # that second pass is most expensive (round-5 advice).  The byte
     # probe in the <=max_docs branch reads the same cache.
-    semi = _track_persist(
+    semi = pin(
         docs.join(ids, id_col, "left_semi").select(id_col, text_col),
-        eager=False,
     )
     hint = lambda d: d  # noqa: E731 - shuffle-join default
     if n_candidate_docs <= broadcast_max_docs:
@@ -861,12 +762,11 @@ def jaccard_verified_pairs(
     # tokenize + shingle every candidate doc twice (once per side's
     # broadcast/shuffle build).  O(|candidates|) rows either way; the
     # lazy persist fills on the first side's build (r10 optimization).
-    sh = _track_persist(
+    sh = pin(
         semi.selectExpr(
             _q(id_col),
             f"array_distinct({shingles_sql(text_col, shingle_n)}) AS sh",
         ),
-        eager=False,
     )
     a = hint(sh.selectExpr(f"{_q(id_col)} AS id_a", "sh AS sh_a"))
     b = hint(sh.selectExpr(f"{_q(id_col)} AS id_b", "sh AS sh_b"))
@@ -1105,7 +1005,7 @@ def winnow_overlap_pairs(
     explode fingerprint sets, equi-join on the hash, score by overlap
     coefficient |A∩B| / min(|A|,|B|)."""
     id_col = kw.get("id_col", "doc_id")
-    fps = _track_persist(winnow_fingerprints(docs, **kw))
+    fps = pin(winnow_fingerprints(docs, **kw), eager=True)
     ex = fps.select(
         F.col(id_col), F.col("n_fingerprints"), F.explode("fingerprints").alias("fp")
     )
@@ -1224,7 +1124,7 @@ def jaccard_prefix_pairs(
             F.array_distinct(shingles(text_col, shingle_n))
         ).alias("t"),
     )
-    tok = _track_persist(tok, eager=False)
+    tok = pin(tok)
     freq = tok.groupBy("t").agg(F.count("*").alias("gf"))
     w = Window.partitionBy(id_col).orderBy("gf", "t")
     ranked = (
@@ -1375,7 +1275,7 @@ def containment_prefix_pairs(
         F.col(id_col),
         F.explode(F.array_distinct(shingles(text_col, shingle_n))).alias("t"),
     )
-    tok = _track_persist(tok, eager=False)
+    tok = pin(tok)
     freq = tok.groupBy("t").agg(F.count("*").alias("gf"))
     w = Window.partitionBy(id_col).orderBy("gf", "t")
     ranked = (

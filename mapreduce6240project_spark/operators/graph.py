@@ -24,7 +24,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce6240project_spark.functions.actions import first_row
+from mapreduce6240project_spark.functions.actions import first_row, overlap
+from mapreduce6240project_spark.session import checkpoint, unpin
 
 
 def _non_null_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
@@ -110,11 +111,10 @@ def connected_components(
     edges = dedup_pairs.select("u", "v").unionByName(
         dedup_pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    labels = (
+    labels = state = checkpoint(
         edges.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint()
     )
     n_changed = 0
     for _ in range(max_iter):
@@ -123,7 +123,9 @@ def connected_components(
             .groupBy("u")
             .agg(F.min("label").alias("nbr_label"))
         )
-        updated = (
+        # truncate lineage; also materializes, so the superseded state
+        # can be freed
+        updated = checkpoint(
             labels.join(neighbor_min, labels.node == neighbor_min.u, "left")
             .select(
                 "node",
@@ -132,7 +134,9 @@ def connected_components(
                 ).alias("label"),
                 (F.coalesce("nbr_label", F.col("label")) < F.col("label")).alias("_chg"),
             )
-        ).localCheckpoint()  # truncate lineage; also materializes
+        )
+        unpin(state)
+        state = updated
         n_changed = updated.filter("_chg").count()
         labels = updated.drop("_chg")
         if n_changed == 0:
@@ -185,8 +189,8 @@ def pagerank_quantized(
     default scale: invisible next to PageRank's own damping tolerance.
 
     Per iteration: one join (edges x ranks) + one sum aggregate -- the
-    standard distributed PR shape; the driver loop persists the new
-    ranks and unpersists the old (same discipline as kmedoids /
+    standard distributed PR shape; the driver loop checkpoints the new
+    ranks and unpins the old (same discipline as
     connected_components).  No dangling-mass term is needed: the
     symmetrized graph gives every node outdegree >= 1.
     """
@@ -205,22 +209,23 @@ def pagerank_quantized(
     init = scale // n_nodes
     teleport = (scale * 15 // 100) // n_nodes
     ranks = deg.select(F.col("u").alias("node"), F.lit(init).alias("pr"))
-    for _ in range(n_iter):
+    for i in range(n_iter):
         contrib = (
             ranks.join(deg, ranks.node == deg.u)
             .select(ranks.node, F.expr("pr DIV outdeg").alias("c"))
             .join(edges, F.col("node") == edges.u)
             .select(F.col("v"), F.col("c"))
         )
-        new_ranks = (
+        new_ranks = checkpoint(  # truncate iteration lineage
             contrib.groupBy("v")
             .agg(F.sum("c").alias("s"))
             .select(
                 F.col("v").alias("node"),
                 (F.lit(teleport) + F.expr("(s * 85) DIV 100")).alias("pr"),
             )
-            .localCheckpoint()  # truncate iteration lineage
         )
+        if i:
+            unpin(ranks)
         ranks = new_ranks
     edges.unpersist()
     deg.unpersist()
@@ -341,21 +346,15 @@ def global_clustering(
     # over the same persisted edge set; the cheap wedge aggregate runs
     # on a driver thread under the triangle join instead of after it
     # (r11, guide section 2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    wed_future = pool.submit(
+    tri, wed = overlap(
+        pairs.sparkSession,
+        lambda: int(first_row(triangle_count(pairs, src, dst))["n_triangles"]),
         lambda: first_row(
             _undirected_degrees(pairs, src, dst).agg(
                 F.sum(F.expr("degree * (degree - 1) div 2")).alias("w")
             )
-        )["w"]
+        )["w"],
     )
-    try:
-        tri = int(first_row(triangle_count(pairs, src, dst))["n_triangles"])
-        wed = wed_future.result()
-    finally:
-        pool.shutdown(wait=False)
     if not was_cached:
         pairs.unpersist(blocking=False)
     wed = int(wed or 0)
@@ -419,9 +418,9 @@ def bfs_hops(
         .persist()
     )
     spark = pairs.sparkSession
-    visited = spark.createDataFrame(
-        [(source, 0)], schema="node bigint, hops int"
-    ).localCheckpoint()
+    visited = checkpoint(
+        spark.createDataFrame([(source, 0)], schema="node bigint, hops int")
+    )
     frontier = visited
     for hop in range(1, max_hops + 1):
         reached = (
@@ -429,14 +428,18 @@ def bfs_hops(
             .select(F.col("v").alias("node"))
             .distinct()
         )
-        frontier = (
-            reached.join(visited, "node", "left_anti")
-            .withColumn("hops", F.lit(hop))
-            .localCheckpoint()
+        nxt = checkpoint(
+            reached.join(visited, "node", "left_anti").withColumn("hops", F.lit(hop))
         )
+        if frontier is not visited:
+            unpin(frontier)
+        frontier = nxt
         if frontier.isEmpty():
             break
-        visited = visited.unionByName(frontier).localCheckpoint()
+        done, visited = visited, checkpoint(visited.unionByName(frontier))
+        unpin(done)
+    if frontier is not visited:
+        unpin(frontier)
     edges.unpersist()
     return visited
 
@@ -498,10 +501,9 @@ def kcore(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    sym = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint()
-    cur = sym
+    cur = checkpoint(
+        edges.unionByName(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    )
     # convergence on the EDGE count (r11, guide section 2.4): a peel
     # round only removes edges by dropping an endpoint node wholesale
     # (the semi-joins keep or drop a node with all its edges), so the
@@ -516,14 +518,14 @@ def kcore(
             .filter(F.col("d") >= k)
             .select("u")
         )
-        nxt = (
+        nxt = checkpoint(
             cur.join(keep, "u", "semi")
             .join(keep.select(F.col("u").alias("v")), "v", "semi")
             .select("u", "v")
-            .localCheckpoint()
         )
-        n_next = nxt.count()
+        unpin(cur)
         cur = nxt
+        n_next = cur.count()
         if n_next == n_edges:
             break
         n_edges = n_next
@@ -574,14 +576,14 @@ def personalized_pagerank_quantized(
         F.col("u").alias("node"),
         F.when(F.col("u") % seed_mod == 0, F.lit(init)).otherwise(F.lit(0)).alias("pr"),
     )
-    for _ in range(n_iter):
+    for i in range(n_iter):
         contrib = (
             ranks.join(deg, ranks.node == deg.u)
             .select(ranks.node, F.expr("pr DIV outdeg").alias("c"))
             .join(edges, F.col("node") == edges.u)
             .select(F.col("v"), F.col("c"))
         )
-        ranks = (
+        new_ranks = checkpoint(
             contrib.groupBy("v")
             .agg(F.sum("c").alias("s"))
             .select(
@@ -593,8 +595,10 @@ def personalized_pagerank_quantized(
                     + F.expr("(s * 85) DIV 100")
                 ).alias("pr"),
             )
-            .localCheckpoint()
         )
+        if i:
+            unpin(ranks)
+        ranks = new_ranks
     edges.unpersist()
     deg.unpersist()
     return ranks

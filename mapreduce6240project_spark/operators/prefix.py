@@ -36,82 +36,16 @@ guaranteed stable -- rows could silently shift partitions and corrupt
 every rank derived from the now-stale literal offsets.  With the
 checkpoint, block loss fails the job loudly instead of corrupting it
 (rerun semantics, the correct trade for an exactness primitive).
-Frames pinned here are tracked and released with
-:func:`release_prefix_caches` (same convention as
-``operators.dedup.release_dedup_caches``); checkpoint blocks are freed
-eagerly by unpersisting the LogicalRDD's underlying RDD (a plain
-``DataFrame.unpersist`` cannot see RDD-level checkpoint storage).
+The checkpoint is a pin (``session.checkpoint``), freed with every
+other pin by ``session.release_pins``.
 """
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_lock = threading.Lock()
-_live: list[DataFrame] = []
-
-
-def _release_frame(f: DataFrame) -> None:
-    """Free a tracked frame's storage.  A localCheckpoint'ed frame is
-    NOT registered with the CacheManager (its persistence is RDD-level
-    inside the LogicalRDD), so ``DataFrame.unpersist`` alone would be a
-    silent no-op and the full-size checkpoint blocks would linger until
-    JVM GC -- reach the underlying RDD through the analyzed plan and
-    unpersist it directly.  BOTH releases always run: a cache_tracked
-    frame can itself root at a LogicalRDD (createDataFrame /
-    checkpoint output), in which case it holds a CacheManager entry AND
-    an RDD-level block set, and an early return after the RDD release
-    would leak the cache entry for the whole session (review finding)."""
-    try:
-        plan = f._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith("LogicalRDD"):
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
-    f.unpersist()
-
-
-def release_prefix_caches() -> None:
-    """Release every frame pinned by :func:`distributed_prefix` /
-    :func:`cache_tracked` (checkpoint blocks included -- see
-    :func:`_release_frame`)."""
-    with _lock:
-        frames, _live[:] = list(_live), []
-    for f in frames:
-        try:
-            _release_frame(f)
-        except Exception:
-            pass
-
-
-def cache_tracked(df: DataFrame) -> DataFrame:
-    """Persist ``df`` under the same release tracking as the module's
-    internal caches -- for callers that feed ONE upstream frame into
-    several :func:`distributed_prefix` orders and don't want each call
-    to recompute it."""
-    d = df.persist()
-    with _lock:
-        _live.append(d)
-    return d
-
-
-def checkpoint_tracked(df: DataFrame) -> DataFrame:
-    """Eagerly ``localCheckpoint`` ``df`` and register it for release.
-
-    For driver-loop iterative state (Bradley-Terry, power iteration)
-    whose recurrence references the previous state more than once: a
-    checkpoint truncates the lineage so the physical plan stays LINEAR
-    in the iteration count instead of exponential.  Tracked here so
-    :func:`release_prefix_caches` frees the checkpoint blocks
-    (``unpersist`` alone is a no-op on them -- see
-    :func:`_release_frame`)."""
-    d = df.localCheckpoint(eager=True)
-    with _lock:
-        _live.append(d)
-    return d
+from mapreduce6240project_spark.session import checkpoint
 
 
 def distributed_prefix(
@@ -140,13 +74,12 @@ def distributed_prefix(
     # collect, which is the first action anyway.  (tools/plan_lint.py
     # treats the resulting RDDScanExec as unbounded, like every
     # localCheckpoint scan.)
-    d = (
-        df.repartitionByRange(*[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    d = checkpoint(
+        df.repartitionByRange(*[F.col(c) for c in order_cols]).withColumn(
+            "_pid", F.spark_partition_id()
+        ),
+        eager=False,
     )
-    with _lock:
-        _live.append(d)
     aggs = [F.count(F.lit(1)).alias("_n")]
     if value_col is not None:
         aggs.append(F.sum(value_col).alias("_s"))

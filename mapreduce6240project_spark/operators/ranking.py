@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mapreduce6240project_spark.session import checkpoint
+
 
 def stratum_order_stats(
     df: DataFrame,
@@ -48,10 +50,10 @@ def stratum_order_stats(
     (include a unique tie-breaker) or ranks are nondeterministic.
     """
     cols = df.columns
-    parts = (
-        df.repartitionByRange(num_partitions, *strata, *order)
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
+    parts = checkpoint(
+        df.repartitionByRange(num_partitions, *strata, *order).withColumn(
+            "pid", F.spark_partition_id()
+        )
     )
     w_in = Window.partitionBy("pid", *strata).orderBy(*order)
     w_cum = w_in.rowsBetween(Window.unboundedPreceding, Window.currentRow)

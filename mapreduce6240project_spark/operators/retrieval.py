@@ -415,9 +415,9 @@ def rm3_expansion_topk(
     # pin the <=|query|+n_expansion-row term table: it feeds BOTH
     # pass-2 joins (hit filter + weighting), and uncached each
     # reference would rebuild the whole pass-1 subtree in a cold plan
-    from mapreduce6240project_spark.operators.prefix import cache_tracked
+    from mapreduce6240project_spark.session import pin
 
-    terms_df = cache_tracked(orig_df.unionByName(exp_t))
+    terms_df = pin(orig_df.unionByName(exp_t))
     # pass 2: weighted expanded query over the corpus
     s2 = _scores(
         ex.join(F.broadcast(terms_df.select("term")), "term"), True

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce6240project_spark.operators.dedup import normalize_text
+from mapreduce6240project_spark.session import checkpoint, pin, unpin
 
 # Minimal per-language stopword markers (public common words).  The
 # heuristic counts marker hits per language and picks the argmax --
@@ -274,7 +275,7 @@ def pack_chunks(
 
     from mapreduce6240project_spark.operators.fanout import fan_out
 
-    d = (
+    d = pin(
         fan_out(docs)
         .repartitionByRange(id_col)
         # null text packs as 0 tokens (keeps the prefix sum total)
@@ -283,7 +284,6 @@ def pack_chunks(
             F.coalesce(token_count(text_col), F.lit(0)).alias("n_tokens"),
         )
         .withColumn("pid", F.spark_partition_id())
-        .persist()
     )
     part_sums = {
         r.pid: r.s
@@ -480,18 +480,20 @@ def bpe_learn_merges(
         .orderBy(F.desc("freq"), "w")
         .limit(top_words)
     )
-    seqs = wf.select(
-        "w",
-        "freq",
-        F.concat(
-            F.lit(" "),
-            F.array_join(
-                F.expr("transform(sequence(1, char_length(w)), i -> substring(w, i, 1))"),
-                " ",
-            ),
-            F.lit(" "),
-        ).alias("seq"),
-    ).localCheckpoint()
+    seqs = checkpoint(
+        wf.select(
+            "w",
+            "freq",
+            F.concat(
+                F.lit(" "),
+                F.array_join(
+                    F.expr("transform(sequence(1, char_length(w)), i -> substring(w, i, 1))"),
+                    " ",
+                ),
+                F.lit(" "),
+            ).alias("seq"),
+        )
+    )
     merges: list[tuple] = []
     for r in range(1, n_merges + 1):
         syms = seqs.select(
@@ -518,14 +520,19 @@ def bpe_learn_merges(
             break
         pa, pb, n = top[0].pa, top[0].pb, top[0].n
         merges.append((r, pa, pb, int(n)))
-        seqs = seqs.withColumn(
-            "seq",
-            F.replace(
-                F.col("seq"),
-                F.lit(f" {pa} {pb} "),
-                F.lit(f" {pa}{pb} "),
-            ),
-        ).localCheckpoint()
+        done, seqs = seqs, checkpoint(
+            seqs.withColumn(
+                "seq",
+                F.replace(
+                    F.col("seq"),
+                    F.lit(f" {pa} {pb} "),
+                    F.lit(f" {pa}{pb} "),
+                ),
+            )
+        )
+        unpin(done)
+    # the merge list is driver state; nothing returned reads seqs
+    unpin(seqs)
     return spark.createDataFrame(
         merges, schema="round int, pa string, pb string, n bigint"
     )

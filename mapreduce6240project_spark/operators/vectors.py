@@ -33,6 +33,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mapreduce6240project_spark.session import checkpoint, unpin
+
 
 def sq_l2_to_literal(vec_col: str | Column, centroid: list[float]) -> Column:
     """Squared L2 distance to a literal centroid as a fold over
@@ -317,14 +319,12 @@ def embedding_covariance(
     ).mapInPandas(
         gram_batches, schema="i int, j int, s_ij long, s_i long, n long"
     )
-    sums = (
-        partials.groupBy("i", "j")
-        .agg(
+    sums = checkpoint(  # d*(d+1)/2 rows; reused thrice below
+        partials.groupBy("i", "j").agg(
             F.sum(F.col("s_ij").cast("decimal(38,0)")).alias("S_ij"),
             F.sum(F.col("s_i").cast("decimal(38,0)")).alias("S_marg"),
             F.sum("n").alias("n_part"),
         )
-        .localCheckpoint()  # d*(d+1)/2 rows; reused thrice below
     )
     # marginals: S_i lives on the diagonal row (i, i); broadcast-join it
     # back onto every (i, j) pair twice (for i and for j).  n is a
@@ -411,16 +411,21 @@ def kcenter_select(
         )
     center = [int(x) for x in first[0].qv]
     picks = [(1, first[0][id_col], 0)]
-    state = q.withColumn("mind", _int_sq_dist("qv", center)).localCheckpoint()
+    state = checkpoint(q.withColumn("mind", _int_sq_dist("qv", center)))
     for r in range(2, k + 1):
         far = state.orderBy(F.desc("mind"), F.col(id_col)).limit(1).collect()
         if not far or far[0].mind == 0:
             break  # fewer than k distinct points: stop at full coverage
         picks.append((r, far[0][id_col], int(far[0].mind)))
         center = [int(x) for x in far[0].qv]
-        state = state.withColumn(
-            "mind", F.least(F.col("mind"), _int_sq_dist("qv", center))
-        ).localCheckpoint()
+        done, state = state, checkpoint(
+            state.withColumn(
+                "mind", F.least(F.col("mind"), _int_sq_dist("qv", center))
+            )
+        )
+        unpin(done)
+    # the picks are driver state; nothing returned reads the distances
+    unpin(state)
     return spark.createDataFrame(
         picks, schema=f"round int, {id_col} bigint, radius_sq bigint"
     )

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreduce6240project_spark.functions.numeric import stable_sum_micros
+from mapreduce6240project_spark.session import pin
 
 
 def tumbling_window(
@@ -130,10 +131,10 @@ def gapfill_locf(
     the boundary value -- at the widths real rollups use, serial per-key
     is the right plan."""
     bucket = (F.unix_timestamp(F.col(ts_col)) / width_s).cast("bigint") * width_s
-    agg = (
-        events.groupBy(bucket.alias("bucket"), F.col(key_col).alias("k"))
-        .agg(F.count("*").alias("n"), stable_sum_micros(value_col).alias("sum_value"))
-        .persist()
+    agg = pin(
+        events.groupBy(bucket.alias("bucket"), F.col(key_col).alias("k")).agg(
+            F.count("*").alias("n"), stable_sum_micros(value_col).alias("sum_value")
+        )
     )
     rng = agg.agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
     spine = (

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from mapreduce6240project_spark.plans.registry import REGISTRY, _register
+from mapreduce6240project_spark.session import checkpoint
 from mapreduce6240project_spark.sources.tables import load_table
 from mapreduce6240project_spark.operators.sketch import (
     hll_estimate,
@@ -105,11 +106,9 @@ def q_hll_mergeable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"), "user_id"
     )
-    # localCheckpoint (not persist): materialized once for both grains,
-    # released when the plan is garbage-collected -- a bare persist here
-    # would pin another copy of the registers per invocation for the
-    # whole session
-    day_regs = hll_registers(ev, "user_id", b=_B, group_cols=("day",)).localCheckpoint()
+    # checkpointed once for both grains (lineage truncated, so the
+    # registers are not recomputed per grain)
+    day_regs = checkpoint(hll_registers(ev, "user_id", b=_B, group_cols=("day",)))
     per_day = hll_estimate(day_regs, b=_B, group_cols=("day",)).select(
         F.lit("day").alias("grain"),
         F.col("day").alias("grain_key"),

@@ -2568,12 +2568,12 @@ def q_cogroup_ks_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("user_id % 2").alias("g"),
         )
     )
-    from mapreduce6240project_spark.operators.prefix import cache_tracked
+    from mapreduce6240project_spark.session import pin
 
     # both cogroup sides read the histogram; uncached, the self-cogroup
-    # would scan and aggregate events twice (tracked under the prefix
-    # release hook every harness already calls per query)
-    hist = cache_tracked(
+    # would scan and aggregate events twice (pinned until the
+    # ``session.release_pins`` every harness calls per query)
+    hist = pin(
         ev.groupBy("event_type", "cents").agg(
             F.count(F.when(F.col("g") == 0, 1)).alias("na_v"),
             F.count(F.when(F.col("g") == 1, 1)).alias("nb_v"),
@@ -3955,9 +3955,9 @@ def q_ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     # y (one row per day) feeds nn, a0, the lag explode AND the lag
     # join: pin it so a cold plan aggregates events once, not four
     # times (30 cold exchanges in the r8 PLANPROFILE)
-    from mapreduce6240project_spark.operators.prefix import cache_tracked
+    from mapreduce6240project_spark.session import pin
 
-    y = cache_tracked(
+    y = pin(
         idx.crossJoin(F.broadcast(mu)).select(
             "t", (F.col("cents") - F.col("m")).alias("yv")
         )
@@ -4281,7 +4281,7 @@ def q_kruskal_wallis_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("g"),
         F.expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").alias("c"),
     )
-    from mapreduce6240project_spark.operators.prefix import cache_tracked
+    from mapreduce6240project_spark.session import pin
 
     # gh feeds the value histogram AND the per-group rank-sum join:
     # pin it ((type x distinct-cents) sized -- tiny) so a cold plan
@@ -4289,7 +4289,7 @@ def q_kruskal_wallis_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     # global-window waiver's substantiation walk must find vh's
     # grain aggregate below the window node, and an InMemoryRelation
     # would hide it (vh rebuilds from the cached gh -- cheap)
-    gh = cache_tracked(
+    gh = pin(
         base.groupBy("g", "c").agg(F.count(F.lit(1)).alias("cnt"))
     )
     vh = gh.groupBy("c").agg(F.sum("cnt").cast("bigint").alias("m"))

@@ -983,7 +983,7 @@ FROM d2"""
 def q_graph_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce6240project_spark.operators.graph import bfs_hops, simgraph_pairs
 
-    pairs = simgraph_pairs(spark, sf_dir).persist()
+    pairs = simgraph_pairs(spark, sf_dir)  # session-persisted store
     d1 = bfs_hops(pairs, source=_SWEEP_SOURCE, max_hops=_SWEEP_HOPS)
     far = (
         d1.orderBy(F.desc("hops"), "node").limit(1).collect()[0].node
@@ -994,7 +994,6 @@ def q_graph_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("hops").cast("bigint").alias("diameter_est"),
         F.count(F.lit(1)).alias("n_reached"),
     )
-    pairs.unpersist()
     return out
 
 

@@ -23,6 +23,7 @@ from mapreduce6240project_spark.functions.numeric import stable_sum_micros
 from mapreduce6240project_spark.operators import vectors as V
 from mapreduce6240project_spark.plans.extensions import _query_vec
 from mapreduce6240project_spark.plans.registry import _register
+from mapreduce6240project_spark.session import checkpoint
 from mapreduce6240project_spark.sources.tables import load_table
 from mapreduce6240project_spark.operators import similarity as S
 from mapreduce6240project_spark.plans.extensions import _ivf_cells_sql, _query_vec
@@ -794,9 +795,9 @@ def q_qsketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         F.date_format("ts", "yyyy-MM-dd").alias("day"), "value"
     )
-    # localCheckpoint, not persist: materialized once for both grains,
-    # released with the plan (same discipline as hll_mergeable_rollup)
-    day_b = quantile_sketch_grouped(ev, "value", group_cols=("day",)).localCheckpoint()
+    # checkpointed once for both grains (same discipline as
+    # hll_mergeable_rollup)
+    day_b = checkpoint(quantile_sketch_grouped(ev, "value", group_cols=("day",)))
     tot_b = day_b.groupBy("bid").agg(F.sum("n").cast("bigint").alias("n"))
     g = day_b.select(F.col("day").alias("grain_key"), "bid", "n").unionByName(
         tot_b.select(F.lit("all").alias("grain_key"), "bid", "n")

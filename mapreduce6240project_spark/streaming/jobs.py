@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce6240project_spark.functions.numeric import stable_sum_micros
+from mapreduce6240project_spark.session import checkpoint
 from mapreduce6240project_spark.sources.tables import load_table
 
 
@@ -569,7 +570,7 @@ def streaming_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
     epochs = _glob.glob(f"{out}/epoch=*")
     all_regs = spark.read.parquet(*epochs)
-    day_regs = all_regs.groupBy("day", "j").agg(F.max("M").alias("M")).localCheckpoint()
+    day_regs = checkpoint(all_regs.groupBy("day", "j").agg(F.max("M").alias("M")))
     per_day = hll_estimate(day_regs, b=8, group_cols=("day",)).select(
         F.lit("day").alias("grain"), F.col("day").alias("grain_key"), "n_approx"
     )

@@ -101,13 +101,19 @@ INVENTORY: dict[str, tuple[int, str]] = {
         "would change the shared expression shape all callers pin)",
     ),
     "operators/dedup.py": (
-        3,
-        "3 .count() sites: eager cache materialization (deliberate, "
-        "scan happens once into the cache), hot-bucket count n_hot (on "
-        "the already-cached banded frame), candidate-id cache "
-        "materialization.  The former 3 .first() probe sites (pre-probe "
-        "max group, byte probe, hot-bucket sample max -- 1-row aggs "
-        "each) now route through functions.actions.first_row (r11)",
+        2,
+        "2 .count() sites: hot-bucket count n_hot (on the already-cached "
+        "banded frame), candidate-id cache materialization (eager cache "
+        "fills go through session.pin(eager=True)).  The former 3 "
+        ".first() probe sites (pre-probe max group, byte probe, "
+        "hot-bucket sample max -- 1-row aggs each) now route through "
+        "functions.actions.first_row (r11)",
+    ),
+    "session.py": (
+        1,
+        "pin(eager=True) cache fill: one deliberate full scan into the "
+        "cache so every consumer reads it (the dedup pair generators' "
+        "eager sites)",
     ),
     "operators/clustering.py": (
         6,

@@ -12,6 +12,7 @@ from mapreduce6240project_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
+from mapreduce6240project_spark.session import release_pins
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -185,62 +186,24 @@ def test_identical_mass_no_quadratic_bucket(spark):
 
 
 def test_identical_mass_survivors(spark):
-    from mapreduce6240project_spark.operators.dedup import (
-        minhash_dedup,
-        release_dedup_caches,
-    )
+    from mapreduce6240project_spark.operators.dedup import minhash_dedup
 
     m = 500
     rows = [(i, BASE) for i in range(m)] + [(m + 1, FAR), (m + 2, "tiny")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     survivors = sorted(r.doc_id for r in minhash_dedup(docs, threshold=0.5).collect())
     assert survivors == [0, m + 1, m + 2]
-    assert release_dedup_caches() > 0
+    assert release_pins() > 0
 
 
-def test_release_dedup_caches_empties_tracker(docs):
+def test_release_pins_empties_registry(docs):
+    from mapreduce6240project_spark import session
     from mapreduce6240project_spark.operators import dedup as D
 
     D.minhash_candidate_pairs(docs).count()
-    assert len(D._live_caches) > 0
-    D.release_dedup_caches()
-    assert len(D._live_caches) == 0
-
-
-def test_track_dedup_caches_scopes_release(docs):
-    from mapreduce6240project_spark.operators import dedup as D
-
-    D.release_dedup_caches()
-    outer = D._track_persist(docs.select("doc_id"), eager=False)
-    with D.track_dedup_caches() as scope:
-        D.minhash_candidate_pairs(docs).count()
-        # in-scope frames go to the thread-local scope, NOT the global
-        # list -- the global release path can never touch them
-        # (dup-light + sample-clear probe -> exactly the signature cache)
-        assert len(scope._scope) >= 1
-        assert D._live_caches == [outer]
-    # the block's caches were released on exit; the outer handle survives
-    assert all(not f.is_cached for f in scope._scope)
-    assert D._live_caches == [outer] and outer.is_cached
-    D.release_dedup_caches()
-
-
-def test_scope_exit_pops_by_identity():
-    # two EMPTY scopes compare equal as lists; a non-well-nested exit
-    # must pop its OWN scope object, not the first equal one (round-6
-    # advice: list.remove pops by equality and could leak the other
-    # pipeline's frames)
-    from mapreduce6240project_spark.operators import dedup as D
-
-    a, b = D.track_dedup_caches(), D.track_dedup_caches()
-    a.__enter__()
-    b.__enter__()
-    stack = D._scope_local.stack
-    assert stack == [a._scope, b._scope]
-    a.__exit__(None, None, None)  # exotic interleaving: outer exits first
-    assert len(stack) == 1 and stack[0] is b._scope
-    b.__exit__(None, None, None)
-    assert stack == []
+    assert len(session._pins) > 0
+    session.release_pins()
+    assert len(session._pins) == 0
 
 
 def test_last_run_stats_thread_isolated():
@@ -267,56 +230,6 @@ def test_last_run_stats_thread_isolated():
     assert D.last_run_stats["hot_probe"] == "full"
 
 
-def test_concurrent_pipelines_release_independently(spark):
-    """Two dedup pipelines on two threads, each in its own
-    track_dedup_caches scope: pipeline A's exit must not unpersist
-    pipeline B's still-live frames (round-5 verdict item 7)."""
-    import threading as th
-
-    from mapreduce6240project_spark.operators import dedup as D
-
-    docs_a = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta doc {i}") for i in range(40)],
-        "doc_id long, text string",
-    )
-    docs_b = spark.createDataFrame(
-        [(i, f"epsilon zeta eta theta doc {i}") for i in range(40)],
-        "doc_id long, text string",
-    )
-    b_entered = th.Event()
-    a_done = th.Event()
-    results: dict = {}
-
-    def run_a():
-        b_entered.wait(30)
-        with D.track_dedup_caches() as sa:
-            results["a_pairs"] = D.minhash_candidate_pairs(
-                docs_a, collapse_identical=False
-            ).count()
-            results["a_frames"] = list(sa._scope)
-        a_done.set()
-
-    def run_b():
-        with D.track_dedup_caches() as sb:
-            results["b_frames_mid"] = D.minhash_candidate_pairs(
-                docs_b, collapse_identical=False
-            )
-            results["b_frames_mid"].count()
-            b_entered.set()
-            a_done.wait(60)
-            # A exited its scope; B's frames must still be cached
-            results["b_alive_after_a"] = [f.is_cached for f in sb._scope]
-            results["b_frames"] = list(sb._scope)
-
-    ta, tb = th.Thread(target=run_a), th.Thread(target=run_b)
-    ta.start(); tb.start(); ta.join(60); tb.join(60)
-    assert results["a_pairs"] >= 0
-    assert all(results["b_alive_after_a"]), "A's release dropped B's caches"
-    assert all(not f.is_cached for f in results["a_frames"])
-    assert all(not f.is_cached for f in results["b_frames"])
-    D.release_dedup_caches()
-
-
 def test_hot_probe_tiers(spark, docs):
     """The sampled hot-bucket probe: dup-light corpora stop at the
     1/probe_mod sample pass; templated masses escalate to the full
@@ -341,7 +254,7 @@ def test_hot_probe_tiers(spark, docs):
     D.minhash_candidate_pairs(docs, collapse_identical=False,
                               hot_bucket_threshold=8).count()
     assert D.last_run_stats["hot_probe"] == "full"
-    D.release_dedup_caches()
+    release_pins()
 
 
 # ---------------------------------------------------------------------------
@@ -380,7 +293,7 @@ def test_templated_mass_hot_buckets_salted(spark):
     assert n_pairs >= 0.98 * (m * (m - 1) // 2)
     # FAR/tiny never collide with the mass
     assert cand.filter("id_b >= 1001 or id_a >= 1001").count() == 0
-    D.release_dedup_caches()
+    release_pins()
 
 
 def test_templated_mass_salted_pair_set_parity(spark):
@@ -403,7 +316,7 @@ def test_templated_mass_salted_pair_set_parity(spark):
     )
     assert D.last_run_stats["hot_buckets"] == 0
     assert salted == plain and len(salted) >= 0.98 * (m * (m - 1) // 2)
-    D.release_dedup_caches()
+    release_pins()
 
 
 def test_duplight_corpus_takes_plain_join(spark):
@@ -414,7 +327,7 @@ def test_duplight_corpus_takes_plain_join(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     D.minhash_candidate_pairs(docs, collapse_identical=False).count()
     assert D.last_run_stats["hot_buckets"] == 0
-    D.release_dedup_caches()
+    release_pins()
 
 
 def test_salt_spread_bounds_bucket_fanout(spark):
@@ -452,7 +365,7 @@ def test_within_star_emits_linear_edges(spark):
     # O(m) star edges (rep=0 -> each member), not m*(m-1)/2
     assert cand.count() == m - 1
     assert cand.filter("id_a = 0").count() == m - 1
-    D.release_dedup_caches()
+    release_pins()
 
 
 def test_minhash_dedup_star_survivors_match_allpairs(spark):
@@ -479,7 +392,7 @@ def test_minhash_dedup_star_survivors_match_allpairs(spark):
         for r in D.minhash_dedup(docs, threshold=0.5, transitive=True).collect()
     )
     assert star_cc == star
-    D.release_dedup_caches()
+    release_pins()
 
 
 def test_jaccard_verify_shuffle_fallback_parity(docs):
@@ -499,4 +412,4 @@ def test_jaccard_verify_shuffle_fallback_parity(docs):
         ).collect()
     }
     assert bc == shuf and (1, 2) in bc
-    D.release_dedup_caches()
+    release_pins()

@@ -66,13 +66,11 @@ def _normalize(df):
 
 
 def _clear_all_caches(spark):
-    from mapreduce6240project_spark.operators.dedup import release_dedup_caches
-    from mapreduce6240project_spark.operators.prefix import release_prefix_caches
+    from mapreduce6240project_spark.session import release_pins
     from mapreduce6240project_spark.sources.tweets import release_feature_store
 
     spark.catalog.clearCache()
-    release_dedup_caches()
-    release_prefix_caches()
+    release_pins()
     release_feature_store(spark)
 
 

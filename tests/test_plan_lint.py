@@ -110,8 +110,8 @@ def test_distributed_prefix_matches_naive_windows(spark):
     from mapreduce6240project_spark.operators.prefix import (
         distributed_prefix,
         ntile_from_rank,
-        release_prefix_caches,
     )
+    from mapreduce6240project_spark.session import release_pins
 
     random.seed(7)
     for n, k in [(1, 5), (3, 5), (53, 4), (101, 10)]:
@@ -142,19 +142,17 @@ def test_distributed_prefix_matches_naive_windows(spark):
             | (F.col("_tile") != F.col("t"))
         ).count()
         assert bad == 0, f"n={n} k={k}: {bad} mismatches"
-        release_prefix_caches()
+        release_pins()
 
 
 def test_distributed_prefix_has_no_global_window(spark):
     """The helper's own plan must pass its consumers' lint: no
     unpartitioned window, ranks from partition-local windows only."""
-    from mapreduce6240project_spark.operators.prefix import (
-        distributed_prefix,
-        release_prefix_caches,
-    )
+    from mapreduce6240project_spark.operators.prefix import distributed_prefix
+    from mapreduce6240project_spark.session import release_pins
 
     df = spark.range(1000).selectExpr("id", "id % 97 AS key")
     out = distributed_prefix(df, ["key", "id"])
     errors, _ = lint_plan(physical_plan_json(out))
     assert "global_window_unbounded" not in errors
-    release_prefix_caches()
+    release_pins()

@@ -11,8 +11,10 @@ Usage::
 
     python tools/driver_mirror.py [--limit 50] [--only name1,name2] [--sf DIR]
 
-Prints one status line per query and a final summary; exits non-zero if
-any checked query mismatches or errors.
+Prints one status line per query, then the persistent-RDD and
+CacheManager counts left after ``session.release_pins`` (flagging a
+query that ends above the allow-listed session stores it filled), and a
+final summary; exits non-zero if any checked query mismatches or errors.
 """
 
 from __future__ import annotations
@@ -48,6 +50,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from mapreduce6240project_spark.session import pin_census, release_pins
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -74,7 +77,9 @@ def main() -> int:
 
     n_pass = n_rows_only = n_fail = n_err = 0
     failures: list[str] = []
+    leaks: list[str] = []
     for i, name in enumerate(names, 1):
+        pins0 = pin_census(spark)
         t0 = time.monotonic()
         try:
             got = qs[name](spark, args.sf).toPandas()
@@ -106,24 +111,27 @@ def main() -> int:
             f"[{i:3d}/{len(names)}] {name:34s} {time.monotonic() - t0:6.1f}s  {status}",
             flush=True,
         )
-        # per-query cache hygiene: operators that persist internal
-        # frames (dedup signatures, prefix range exchanges) must not
-        # accumulate across a 395-query session
-        from mapreduce6240project_spark.operators.dedup import (
-            release_dedup_caches,
+        # per-query cache hygiene: the frames a query pinned must not
+        # accumulate across a full-registry session; after the release only
+        # the allow-listed session stores it filled may remain
+        release_pins()
+        rdds, entries, stores = pin_census(spark)
+        extra = max(len(rdds - pins0[0]), entries - pins0[1]) - (stores - pins0[2])
+        print(
+            f"      pins: rdds={len(rdds)} cache_entries={entries}"
+            + (f"  LEAK +{extra} above allow-list" if extra > 0 else ""),
+            flush=True,
         )
-        from mapreduce6240project_spark.operators.prefix import (
-            release_prefix_caches,
-        )
-
-        release_dedup_caches()
-        release_prefix_caches()
+        if extra > 0:
+            leaks.append(name)
 
     print(
         f"\nSUMMARY pass={n_pass} rows_only={n_rows_only} fail={n_fail} err={n_err}"
     )
     if failures:
         print("failures:", ",".join(failures))
+    if leaks:
+        print("pin leaks:", ",".join(leaks))
     spark.stop()
     return 1 if (n_fail or n_err) else 0
 

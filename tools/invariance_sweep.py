@@ -18,7 +18,7 @@ This tool runs every ``queries()`` entry twice in one session --
   (forces multi-split input scans), AQE coalescing off
 
 -- clearing every cached frame in between (``spark.catalog.clearCache``
-plus the explicit release hooks), and compares the full sorted,
+plus ``session.release_pins``), and compares the full sorted,
 stringified results.  A mismatch means the query's value depends on
 physical layout, which the single-layout DuckDB oracle cannot see.
 
@@ -69,12 +69,10 @@ def _normalize(df):
 
 def _clear_all_caches(spark) -> None:
     spark.catalog.clearCache()
-    from mapreduce6240project_spark.operators.dedup import release_dedup_caches
-    from mapreduce6240project_spark.operators.prefix import release_prefix_caches
+    from mapreduce6240project_spark.session import release_pins
     from mapreduce6240project_spark.sources.tweets import release_feature_store
 
-    release_dedup_caches()
-    release_prefix_caches()
+    release_pins()
     release_feature_store(spark)
 
 

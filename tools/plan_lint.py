@@ -496,22 +496,16 @@ def main() -> int:
                 f"{extra}{note}"
             )
         # release anything a builder cached (adaptive ops persist);
-        # also empty the dedup/prefix trackers and the feature-store
-        # singleton so each query is captured against cold cache state
-        # (a warm feature store swaps InMemoryTableScan for the file
-        # scan and hides the real plan shape)
-        from mapreduce6240project_spark.operators.dedup import (
-            release_dedup_caches,
-        )
-        from mapreduce6240project_spark.operators.prefix import (
-            release_prefix_caches,
-        )
+        # also free the pins and the feature-store singleton so each
+        # query is captured against cold cache state (a warm feature
+        # store swaps InMemoryTableScan for the file scan and hides the
+        # real plan shape)
+        from mapreduce6240project_spark.session import release_pins
         from mapreduce6240project_spark.sources.tweets import (
             release_feature_store,
         )
 
-        release_dedup_caches()
-        release_prefix_caches()
+        release_pins()
         release_feature_store(spark)
         spark.catalog.clearCache()
 

@@ -1,15 +1,16 @@
-"""Round-11 optimization profiler.
+"""Query profiler: construction vs execution, per query.
 
 For each headline query (or --only list) at --sf:
   * times fn() construction (eager driver work: probes, collects, loops)
     separately from the noop-sink execution of the returned frame,
   * counts the Spark jobs each phase launched (status-tracker delta),
-  * optionally dumps .explain('formatted') to plans/r11/<name>_<tag>.txt.
+  * with --explain-tag TAG, dumps .explain('formatted') to
+    plans/TAG/<name>.txt (e.g. ``--explain-tag r12-before``).
 
 Usage::
 
-    python tools/profile_r10.py [--sf DIR] [--only a,b] [--runs 2]
-        [--explain-tag before] [--all-headline]
+    python tools/query_profile.py [--sf DIR] [--only a,b] [--runs 2]
+        [--explain-tag TAG]
 """
 
 from __future__ import annotations
@@ -19,7 +20,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from mapreduce6240project_spark.plans import REGISTRY  # noqa: E402
 from mapreduce6240project_spark.session import get_spark  # noqa: E402
@@ -33,7 +35,7 @@ def main() -> int:
     ap.add_argument("--explain-tag", default="")
     args = ap.parse_args()
 
-    spark = get_spark(app_name="profile_r10")
+    spark = get_spark(app_name="query_profile")
     sc = spark.sparkContext
     spark.range(1000).write.format("noop").mode("overwrite").save()
 
@@ -42,8 +44,9 @@ def main() -> int:
     else:
         names = [s.name for s in REGISTRY.values() if s.headline]
 
-    plans_dir = Path("/root/repo/plans/r11")
-    plans_dir.mkdir(parents=True, exist_ok=True)
+    plans_dir = REPO / "plans" / args.explain_tag
+    if args.explain_tag:
+        plans_dir.mkdir(parents=True, exist_ok=True)
 
     # warm shared session caches (feature store) outside the measured
     # region, mirroring bench.py
@@ -57,7 +60,7 @@ def main() -> int:
         spec = REGISTRY[name]
         best = None
         for r in range(args.runs):
-            sc.setJobDescription(f"r11-profile:{name}")
+            sc.setJobDescription(f"profile:{name}")
             j0 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
             t0 = time.perf_counter()
             df = spec.fn(spark, args.sf)
@@ -77,7 +80,7 @@ def main() -> int:
                 buf = io.StringIO()
                 with contextlib.redirect_stdout(buf):
                     df.explain("formatted")
-                (plans_dir / f"{name}_{args.explain_tag}.txt").write_text(
+                (plans_dir / f"{name}.txt").write_text(
                     buf.getvalue()
                 )
         print(f"{name:28s} {best[0]:7.3f} {best[1]:7.3f} {best[2]:7.3f} "
